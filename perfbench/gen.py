@@ -1,18 +1,17 @@
 #!/usr/bin/env python3
 """Seeded input generator for the graft benchmark.
 
-Writes one directory of parquet inputs for one (workload, seed, params) and a
-_MANIFEST.json naming them (the leading underscore keeps Spark from reading it
+Writes one directory of parquet inputs for one (kind, seed) and a
+_MANIFEST.json naming them and recording the parameters below (the leading underscore keeps Spark from reading it
 as data). run.py calls this as its own process, before any timing, and reuses
 an existing directory only when its manifest matches.
 
-  python3 perfbench/gen.py --kind tables --seed 7 --out DIR [--sf 0.02]
-  python3 perfbench/gen.py --kind store  --seed 7 --out DIR [--keys N ...]
+  python3 perfbench/gen.py --kind tables|store --seed 7 --out DIR
 
 kind=tables: the ten star-schema, event and LLM-pipeline tables the query
 packs read (same names, columns and value domains as the fixtures described
-in FIXTURES.md), sized by --sf. kind=store: a multi-file, versioned event
-store for compaction. The seed decides key assignment, version counts and
+in FIXTURES.md), at scale factor SF. kind=store: a multi-file, versioned event
+store for compaction: KEYS keys, about VERSIONS versions per key, FILES files. The seed decides key assignment, version counts and
 which file each version lands in; file modification times follow file order
 so a file-stream source replays them in a fixed order.
 """
@@ -26,6 +25,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 GEN_VERSION = 1
+SF = 0.02
+KEYS, VERSIONS, FILES = 200000, 4, 8
 WORDS = ("spark window merge table column vector stream value data small join "
          "filter big group hash customer sort order slow line part fast row the "
          "agg key query a scan batch").split()
@@ -167,18 +168,14 @@ def main():
     ap.add_argument("--kind", choices=["tables", "store"], required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--sf", type=float, default=0.02)
-    ap.add_argument("--keys", type=int, default=100000)
-    ap.add_argument("--versions", type=float, default=4.0)
-    ap.add_argument("--files", type=int, default=24)
     a = ap.parse_args()
-    params = ({"kind": "tables", "sf": a.sf} if a.kind == "tables" else
-              {"kind": "store", "keys": a.keys, "versions": a.versions, "files": a.files})
+    params = ({"kind": "tables", "sf": SF} if a.kind == "tables" else
+              {"kind": "store", "keys": KEYS, "versions": VERSIONS, "files": FILES})
     params.update(seed=a.seed, gen_version=GEN_VERSION)
     os.makedirs(a.out, exist_ok=True)
     rng = np.random.default_rng(a.seed)
-    info = (tables(rng, a.out, a.sf) if a.kind == "tables" else
-            store(rng, a.out, a.keys, a.versions, a.files))
+    info = (tables(rng, a.out, SF) if a.kind == "tables" else
+            store(rng, a.out, KEYS, VERSIONS, FILES))
     files = sorted(f for f in os.listdir(a.out) if f.endswith(".parquet"))
     manifest = {"params": params, "info": info,
                 "files": {f: os.path.getsize(os.path.join(a.out, f)) for f in files}}

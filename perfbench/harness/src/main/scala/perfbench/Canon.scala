@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Order-insensitive digest of a query result: every row is rendered to a
   * canonical string (columns sorted by name, doubles by their exact bits with
@@ -14,7 +16,10 @@ import org.apache.spark.sql.{DataFrame, Row}
   * from the DuckDB oracle on the same inputs.
   *
   * Computing it consumes every row and every column of the query's own
-  * physical plan (sorts included), which is why it is the timed action.
+  * physical plan (sorts included), which is why it is the timed action. It
+  * runs `queryExecution.toRdd`, the executed plan the caller has already
+  * forced, as one SQL execution, like a Dataset action does. (`df.rdd` would
+  * build and plan a second QueryExecution inside the timed action.)
   */
 object Canon {
   final case class Digest(rows: Long, sum: Long) {
@@ -23,19 +28,25 @@ object Canon {
 
   def digest(df: DataFrame): Digest = {
     val order = df.columns.zipWithIndex.sortBy(_._1).map(_._2)
-    val parts = df.rdd.mapPartitions { rows =>
-      val md = MessageDigest.getInstance("MD5")
-      val sb = new java.lang.StringBuilder
-      var n = 0L
-      var sum = 0L
-      rows.foreach { row =>
-        sb.setLength(0)
-        order.foreach { i => put(sb, row.get(i)); sb.append('|') }
-        sum += ByteBuffer.wrap(md.digest(sb.toString.getBytes(UTF_8))).getLong
-        n += 1
-      }
-      Iterator(Digest(n, sum))
-    }.collect()
+    val schema = df.schema
+    val qe = df.queryExecution
+    val parts = SQLExecution.withNewExecutionId(qe, Some("digest")) {
+      qe.toRdd.mapPartitions { rows =>
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        val md = MessageDigest.getInstance("MD5")
+        val sb = new java.lang.StringBuilder
+        var n = 0L
+        var sum = 0L
+        rows.foreach { internal =>
+          val row = toRow(internal).asInstanceOf[Row]
+          sb.setLength(0)
+          order.foreach { i => put(sb, row.get(i)); sb.append('|') }
+          sum += ByteBuffer.wrap(md.digest(sb.toString.getBytes(UTF_8))).getLong
+          n += 1
+        }
+        Iterator(Digest(n, sum))
+      }.collect()
+    }
     Digest(parts.map(_.rows).sum, parts.map(_.sum).sum)
   }
 

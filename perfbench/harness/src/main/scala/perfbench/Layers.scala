@@ -68,6 +68,35 @@ object Layers {
     ) ++ daemon ++ families
   }
 
+  /** The split of each op of one traced pass, keyed by op name: its phase
+    * times, the jobs its phases ran (found through their job groups) and
+    * those jobs' task counters. `core_util` is task time over op wall time
+    * times cores.
+    */
+  def perOp(p: Int, cpus: Int, exec: ExecListener, groups: Map[String, Span], spans: Spans,
+            ops: Seq[OpRec]): Map[String, Map[String, Double]] = {
+    val wall = ops.map(o => o.name -> o.wall).toMap
+    val phases = spans.all.filter(s => s.pass == p && Set("build", "plan", "action")(s.layer))
+    phases.groupBy(_.op).map { case (op, ph) =>
+      val name = ph.head.name
+      def phaseS(layer: String) = ph.filter(_.layer == layer).map(s => (s.end - s.start) / 1e9).sum
+      def mine(group: String) = groups.get(group).exists(_.op == op)
+      val jobs = exec.jobs.values.filter(j => mine(j.group))
+      val st = exec.stages.values.filter(s => mine(s.group))
+      val busy = st.map(_.runMs).sum / 1e3
+      name -> Map(
+        "build_s" -> phaseS("build"),
+        "plan_s" -> phaseS("plan"),
+        "action_s" -> phaseS("action"),
+        "build_jobs" -> jobs.count(j => groups.get(j.group).exists(_.layer == "build")).toDouble,
+        "jobs" -> jobs.size.toDouble,
+        "task_busy_s" -> busy,
+        "core_util" -> busy / (wall(name) * cpus),
+        "shuffle_bytes" -> st.map(_.shWrite).sum.toDouble,
+        "scan_bytes" -> st.map(_.inBytes).sum.toDouble)
+    }
+  }
+
   /** Total length of the union of [start, end) intervals. */
   def union(iv: Seq[(Long, Long)]): Long = {
     var total, curS, curE = 0L

@@ -20,7 +20,7 @@ import graft.streaming.StreamingDaemon
   * passes, spans and Spark counters) to a JSON file that perfbench/run.py
   * turns into metrics and checks against the DuckDB oracle.
   *
-  *   --workload queries|compaction  --data DIR  --work DIR
+  *   --workload queries|compaction|survey|setup  --data DIR  --work DIR
   *   --out FILE  --seconds S  --seed N  --trace 0|1  --cpus N
   */
 object Main {
@@ -43,7 +43,10 @@ object Main {
     try {
       spark.sparkContext.setLogLevel("WARN")
       spark.sparkContext.setCheckpointDir(s"${a("work")}/checkpoint")
-      Files.writeString(Paths.get(a("out")), Json(base ++ new Run(spark, a, cpus).run()))
+      // `setup` stops once the session is ready: run.py starts it for
+      // further set-up samples.
+      val run = if (a("workload") == "setup") Map.empty else new Run(spark, a, cpus).run()
+      Files.writeString(Paths.get(a("out")), Json(base ++ run))
     } finally spark.stop()
   }
 }
@@ -71,31 +74,35 @@ final class Run(spark: SparkSession, a: Main.Args, cpus: Int) {
   private val groupSpan = mutable.Map.empty[String, Span]
 
   private val packs: Seq[QueryPack] =
-    if (workload == "queries")
-      Seq(MetaQueries, JoinQueries, AnalyticsQueries, TextQueries, VectorQueries)
-    else Nil
+    if (workload == "compaction") Nil
+    else Seq(MetaQueries, JoinQueries, AnalyticsQueries, TextQueries, VectorQueries)
+  // `survey` runs every query of the packs, to measure what `queries` picks from.
   private lazy val queries: Seq[(String, QueryPack#Q)] = {
     val all = packs.flatMap(_.queries).toMap
-    Workloads.queries.map(n => n -> all(n))
+    val names = if (workload == "survey") all.keys.toSeq.sorted else Workloads.queries
+    names.map(n => n -> all(n))
   }
 
   def run(): Map[String, Any] = {
     val seconds = a("seconds").toDouble
-    // At least two warm passes of each kind (untraced, and traced when
-    // tracing) however short `seconds` is.
-    val minPasses = if (trace) 5 else 3
+    // At least two measured warm passes of each kind (untraced, and traced
+    // when tracing) however short `seconds` is.
+    val minPasses = if (trace) 6 else 4
     val passes = mutable.ArrayBuffer.empty[Map[String, Any]]
     val heaps = mutable.ArrayBuffer.empty[Double]
     var start = 0L
     var p = 0
-    // The cold pass, then warm passes for `seconds` (at least minPasses in
-    // all). The cold pass is traced; warm passes alternate untraced (odd)
-    // and traced (even), so a traced run also measures the tracing overhead.
+    // The cold pass, one warm-up pass, then measured warm passes for
+    // `seconds` (at least minPasses in all). The queries still get faster
+    // for a few passes after the cold one, so the pass right after it is
+    // left out of the warm figures. The cold pass is traced and the warm-up
+    // pass is not. Measured passes run untraced, traced, traced, untraced,
+    // and so on, so a traced run also measures the tracing overhead, and a
+    // steady trend across passes cancels out of it.
     while (p < minPasses || (System.nanoTime() - start) / 1e9 < seconds) {
-      passes += pass(p, trace && p % 2 == 0)
-      if (p == 0) start = System.nanoTime()
-      System.gc()
-      heaps += ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+      passes += pass(p, trace && (p == 0 || Set(1, 2)((p - 2) % 4)))
+      if (p == 1) start = System.nanoTime()
+      heaps += liveHeapMb()
       p += 1
     }
     writeSpans()
@@ -103,7 +110,19 @@ final class Run(spark: SparkSession, a: Main.Args, cpus: Int) {
     Map("cpus" -> cpus, "passes" -> passes, "heap_mb" -> heaps,
       "oracles" -> (if (packs.isEmpty) Map.empty
                     else queries.map(_._1).flatMap(n => oracles.get(n).map(n -> _)).toMap),
+      "pack" -> packs.flatMap(pk => pk.queries.keys.map(_ -> pk.getClass.getSimpleName.stripSuffix("$"))).toMap,
       "spans" -> s"$work/spans.jsonl")
+  }
+
+  /** Heap in use after a full GC. The first GC lets Spark's ContextCleaner
+    * find unreachable RDDs, shuffles and broadcasts; it drops their blocks
+    * asynchronously, so a second GC after a pause collects those too.
+    */
+  private def liveHeapMb(): Double = {
+    System.gc()
+    Thread.sleep(300)
+    System.gc()
+    ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
   }
 
   private def pass(p: Int, tr: Boolean): Map[String, Any] = {
@@ -128,15 +147,19 @@ final class Run(spark: SparkSession, a: Main.Args, cpus: Int) {
     val e = System.nanoTime()
     val wall = (e - s) / 1e9
     var layer = Map.empty[String, Double]
+    var opLayer = Map.empty[String, Map[String, Double]]
     if (tr) {
       org.apache.spark.BusDrain(sc)
       sc.removeSparkListener(exec)
       spark.streams.removeListener(batchL)
       spans.add(Span(passId, 0, "pass", s"pass $p", p, 0, s, e))
+      opLayer = Layers.perOp(p, cpus, exec, groupSpan.toMap, spans, ops)
       layer = Layers.aggregate(p, wall, cpus, exec, batchL, groupSpan.toMap, spans, ops) ++ extraLayer(p)
       traced = false
     }
-    Map("pass" -> p, "traced" -> tr, "wall_s" -> wall, "ops" -> ops.map(_.json), "layer" -> layer)
+    val role = if (p == 0) "cold" else if (p == 1) "warmup" else "warm"
+    Map("pass" -> p, "role" -> role, "traced" -> tr, "wall_s" -> wall, "ops" -> ops.map(_.json), "layer" -> layer,
+      "op_layer" -> opLayer)
   }
 
   /** Runs `body` as one phase span of op `op`, under its own job group. */

@@ -18,7 +18,6 @@ import os
 import struct
 
 import duckdb
-import pyarrow.parquet as pq
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -111,18 +110,21 @@ def _same(con, a, b):
 
 
 class CompactionOracle:
-    """Expected last-write-wins results of one generated event store."""
+    """Expected last-write-wins results of one generated event store,
+    computed once and kept as DuckDB tables for the checks of every pass."""
 
     def __init__(self, store_dir):
         self.con = duckdb.connect()
-        self.store = f"read_parquet('{store_dir}/part-*.parquet')"
+        store = f"read_parquet('{store_dir}/part-*.parquet')"
         self.keys = self.con.sql(
-            f"SELECT count(*) FROM (SELECT DISTINCT {', '.join(KEYS)} FROM {self.store})").fetchone()[0]
-        # Fingerprint of each file's LWW result -> the file, to pair batches with files.
+            f"SELECT count(*) FROM (SELECT DISTINCT {', '.join(KEYS)} FROM {store})").fetchone()[0]
+        self.con.execute(f"CREATE TABLE lww_all AS {_lww(store)}")
+        # Fingerprint of each file's LWW result -> its table, to pair batches with files.
         self.by_fp = {}
-        for f in sorted(glob.glob(f"{store_dir}/part-*.parquet")):
+        for i, f in enumerate(sorted(glob.glob(f"{store_dir}/part-*.parquet"))):
             src = f"read_parquet('{f}')"
-            self.by_fp[self._fp(f"({_lww(src)})")] = src
+            self.con.execute(f"CREATE TABLE lww_{i} AS {_lww(src)}")
+            self.by_fp[self._fp(f"lww_{i}")] = f"lww_{i}"
 
     def _fp(self, rel):
         return self.con.sql(f"SELECT count(*), sum(event_id), min(event_id), max(event_id) FROM {rel}").fetchone()
@@ -137,12 +139,18 @@ class CompactionOracle:
         n = self.con.sql(f"SELECT count(*) FROM {out}").fetchone()[0]
         if n != self.keys:
             errs.append(f"bulk: {n} output keys, {self.keys} distinct input keys")
-        if not _same(self.con, f"SELECT * FROM {out}", _lww(self.store)):
+        if not _same(self.con, f"SELECT * FROM {out}", "SELECT * FROM lww_all"):
             errs.append("bulk: kept rows differ from newest (ts, event_id) per key")
         for f in files:
-            t = pq.read_table(f, columns=list(KEYS))
-            ks = list(zip(t.column(0).to_pylist(), t.column(1).to_pylist()))
-            if any(ks[i] > ks[i + 1] for i in range(len(ks) - 1)):
+            # Rows out of key order: a row whose key is below the previous row's.
+            unsorted = self.con.sql(
+                f"SELECT count(*) FROM (SELECT user_id, event_type, "
+                f"lag(user_id) OVER w AS pu, lag(event_type) OVER w AS pe "
+                f"FROM read_parquet('{f}', file_row_number = true) "
+                f"WINDOW w AS (ORDER BY file_row_number)) "
+                f"WHERE pu IS NOT NULL AND (pu, pe) > (user_id, event_type)"
+            ).fetchone()[0]
+            if unsorted:
                 errs.append(f"bulk: {os.path.basename(f)} is not sorted by key")
         return errs
 
@@ -157,7 +165,7 @@ class CompactionOracle:
         for b in batches:
             out = f"(SELECT * FROM read_parquet('{b}/*.parquet'))"
             src = self.by_fp.get(self._fp(out))
-            if src is None or src in seen or not _same(self.con, out, _lww(src)):
+            if src is None or src in seen or not _same(self.con, out, f"SELECT * FROM {src}"):
                 errs.append(f"rolling: {os.path.basename(b)} is not the LWW of one input file")
             seen.add(src)
         return errs

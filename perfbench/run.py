@@ -13,8 +13,10 @@ operation starts when the previous one returns), checks every output against
 DuckDB, prints each metric by name with its unit, and ends with one JSON line:
 {"correct", "attempted", "failed", "metrics"}. With --trace 0 the metrics are
 the end-to-end ones; with --trace 1 the per-layer ones (cold pass prefixed
-`cold.`, otherwise the median traced warm pass), span self times per layer and
-the tracing overhead. Everything it writes stays under perfbench/.cache.
+`cold.`, otherwise the median traced warm pass), span self times per layer,
+each op's own split and the tracing overhead. `--workload survey --trace 1`
+measures every query of the packs instead (see SURVEY_DEADLINE_S). Everything
+it writes stays under perfbench/.cache.
 """
 import argparse
 import glob
@@ -34,16 +36,22 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 CACHE = os.path.join(HERE, ".cache")
 CPUS = 4
 DEADLINE_S = 170          # a run must end within 180 s
+SETUP_SAMPLES = 2         # JVMs whose set-up time is measured per run
 BUILD_TIMEOUT_S = 800
 
-# Inputs per workload; gen.py documents the parameters. The query tables
-# are generated from one fixed seed, like read-only fixtures: for `queries`
-# the run's seed permutes the query order of each warm pass.
+# The input kind gen.py makes for each workload. The query tables are
+# generated from one fixed seed, like read-only fixtures: for `queries` the
+# run's seed permutes the query order of each warm pass.
 TABLES_SEED = 42
-GEN = {
-    "queries": ["--kind", "tables", "--sf", "0.02"],
-    "compaction": ["--kind", "store", "--keys", "50000", "--versions", "4", "--files", "8"],
-}
+KIND = {"queries": "tables", "compaction": "store", "survey": "tables"}
+# `survey` is not one of the benchmark's workloads: run with --trace 1, it
+# runs every query of the packs and prints each one's layer split, the
+# relational and pipeline totals, and the query per family that `queries`
+# takes (see README.md). It takes several minutes.
+SURVEY_DEADLINE_S = 1800
+RELATIONAL = {"MetaQueries", "JoinQueries", "AnalyticsQueries"}
+OP_COLS = ["wall_s", "build_s", "build_jobs", "plan_s", "action_s", "jobs", "task_busy_s",
+           "core_util", "shuffle_bytes", "scan_bytes"]
 
 END_TO_END = [("setup_s", "s"), ("cold_pass_s", "s"), ("warm_pass_s", "s"),
               ("op_p50_s", "s"), ("live_heap_mb", "MB")]
@@ -137,10 +145,10 @@ def run_proc(cmd, cwd, env, out, timeout):
 
 def inputs(workload, seed):
     """Generated input directory, reused only when its manifest matches."""
-    args = GEN[workload]
-    key = tree_hash([os.path.join(HERE, "gen.py")]) + json.dumps([args, seed])
+    kind = KIND[workload]
+    key = tree_hash([os.path.join(HERE, "gen.py")]) + json.dumps([kind, seed])
     key = hashlib.sha256(key.encode()).hexdigest()[:12]
-    out = os.path.join(CACHE, "data", f"{args[1]}-{seed}-{key}")
+    out = os.path.join(CACHE, "data", f"{kind}-{seed}-{key}")
     man = os.path.join(out, "_MANIFEST.json")
     if os.path.exists(man):
         with open(man) as fh:
@@ -151,8 +159,11 @@ def inputs(workload, seed):
         ok = ok and all(os.path.exists(os.path.join(out, f)) for f in m["files"])
         if ok:
             return out, m
-    shutil.rmtree(out, ignore_errors=True)
-    cmd = [sys.executable, os.path.join(HERE, "gen.py"), *args, "--seed", str(seed), "--out", out]
+    # One input set per kind is kept: a new seed replaces the previous one.
+    for old in glob.glob(os.path.join(CACHE, "data", f"{kind}-*")):
+        shutil.rmtree(old, ignore_errors=True)
+    cmd = [sys.executable, os.path.join(HERE, "gen.py"), "--kind", kind, "--seed", str(seed),
+           "--out", out]
     if subprocess.run(cmd).returncode != 0:
         fail("input generation failed")
     with open(man) as fh:
@@ -218,8 +229,9 @@ def self_times(spans, passes):
 
 
 def check(workload, data_dir, manifest, r, work):
-    """(attempted, failed, errors): every op of every pass, checked."""
-    errors, attempted, failed = [], 0, 0
+    """(attempted, failed, errors, names of failed ops): every op of every
+    pass, checked."""
+    errors, attempted, failed, bad = [], 0, 0, set()
     if workload == "compaction":
         orc = oracle.CompactionOracle(data_dir)
         for p in r["passes"]:
@@ -228,12 +240,15 @@ def check(workload, data_dir, manifest, r, work):
                 if op["error"]:
                     errors.append(f"pass {p['pass']} {op['name']}: {op['error']}")
                     failed += 1
+                    bad.add(op["name"])
                     continue
                 out = os.path.join(work, "out", f"p{p['pass']}")
                 errs = (orc.check_bulk(os.path.join(out, "bulk")) if op["name"] == "bulk" else
                         orc.check_rolling(os.path.join(out, "roll"), manifest["info"]["files"]))
                 errors += [f"pass {p['pass']} {e}" for e in errs]
                 failed += bool(errs)
+                if errs:
+                    bad.add(op["name"])
     else:
         expected = oracle.query_digests(data_dir, r["oracles"])
         for p in r["passes"]:
@@ -249,12 +264,77 @@ def check(workload, data_dir, manifest, r, work):
                 else:
                     continue
                 failed += 1
-    return attempted, failed, errors
+                bad.add(op["name"])
+    return attempted, failed, errors, bad
+
+
+def op_layers(passes):
+    """{op: {figure: value}}: each op's layer split (Layers.perOp), the median
+    over the traced warm passes, plus its cold-pass wall time (cold_s) and
+    median untraced warm wall time (warm_s)."""
+    traced = [p for p in passes if p["role"] == "warm" and p["traced"]]
+    warm = [p for p in passes if p["role"] == "warm" and not p["traced"]]
+    res = {}
+    for op in passes[0]["ops"]:
+        n = op["name"]
+        walls = {p["pass"]: o["wall_s"] for p in passes for o in p["ops"] if o["name"] == n}
+        row = {"cold_s": op["wall_s"],
+               "warm_s": statistics.median(walls[p["pass"]] for p in warm),
+               "wall_s": statistics.median(walls[p["pass"]] for p in traced)}
+        for c in OP_COLS[1:]:
+            row[c] = statistics.median(p["op_layer"].get(n, {}).get(c, 0.0) for p in traced)
+        res[n] = row
+    return res
+
+
+def print_ops(ops, extra=None):
+    print("  per-op split, median of the traced warm passes (cold_s and warm_s untraced):")
+    cols = ["cold_s", "warm_s"] + OP_COLS
+    print("  " + f"{'op':<30}" + "".join(f"{c:>14}" for c in cols) + ("  " + extra[0] if extra else ""))
+    for n, row in ops.items():
+        tail = "  " + extra[1](n) if extra else ""
+        print("  " + f"{n:<30}" + "".join(f"{row[c]:14.4f}" for c in cols) + tail)
+
+
+def shares(rows, cpus):
+    """Totals of a set of per-op rows: shares of the traced op wall time
+    spent in build, plan and action, core use, jobs and shuffle."""
+    wall = sum(r["wall_s"] for r in rows)
+    return {"queries": len(rows), "warm_s": sum(r["warm_s"] for r in rows),
+            "cold_s": sum(r["cold_s"] for r in rows),
+            "build_share": sum(r["build_s"] for r in rows) / wall,
+            "plan_share": sum(r["plan_s"] for r in rows) / wall,
+            "action_share": sum(r["action_s"] for r in rows) / wall,
+            "core_util": sum(r["task_busy_s"] for r in rows) / (wall * cpus),
+            "build_jobs": sum(r["build_jobs"] for r in rows),
+            "jobs": sum(r["jobs"] for r in rows),
+            "shuffle_mb": sum(r["shuffle_bytes"] for r in rows) / 1e6}
+
+
+def survey(ops, r, bad):
+    """Prints each query's split, the relational and pipeline totals of all
+    queries and of the picks, and the picks: per operator family, of the
+    queries whose outputs checked, the one whose warm time is nearest the
+    family's median."""
+    half = {n: "relational" if pk in RELATIONAL else "pipeline" for n, pk in r["pack"].items()}
+    fam = {o["name"]: o["family"] for o in r["passes"][0]["ops"]}
+    print_ops(ops, ("half family ok", lambda n: f"{half[n]} {fam[n]} {n not in bad}"))
+    picks = []
+    for f in sorted({fam[n] for n in ops} - {"other"}):
+        good = [n for n in ops if fam[n] == f and n not in bad]
+        if good:
+            mid = statistics.median(ops[n]["warm_s"] for n in good)
+            picks.append(min(good, key=lambda n: (abs(ops[n]["warm_s"] - mid), n)))
+    print(f"  picks: {picks}")
+    for h in ("relational", "pipeline"):
+        for label, names in (("all", list(ops)), ("picks", picks)):
+            t = shares([ops[n] for n in names if half[n] == h], r["cpus"])
+            print(f"  {h:<10} {label:<5} " + " ".join(f"{k} {v:.3f}" for k, v in t.items()))
 
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--workload", required=True, choices=sorted(GEN))
+    ap.add_argument("--workload", required=True, choices=sorted(KIND))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -266,15 +346,20 @@ def main():
 
     cp = build()
     t_start = time.time()  # the build is not part of a run's time limit
-    data_dir, manifest = inputs(a.workload, TABLES_SEED if a.workload == "queries" else a.seed)
+    data_dir, manifest = inputs(a.workload, a.seed if a.workload == "compaction" else TABLES_SEED)
     work = os.path.join(CACHE, "runs", f"{a.workload}-{a.seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     try:
+        deadline = SURVEY_DEADLINE_S if a.workload == "survey" else DEADLINE_S
+        # More set-up samples, each a JVM that stops once its session is ready.
+        setups = [jvm(cp, work, ["--workload", "setup"], deadline - (time.time() - t_start))
+                  for _ in range(SETUP_SAMPLES - 1)]
         r = jvm(cp, work, ["--workload", a.workload, "--data", data_dir, "--seconds", str(a.seconds),
                            "--seed", str(a.seed), "--trace", str(a.trace)],
-                DEADLINE_S - (time.time() - t_start))
-        attempted, failed, errors = check(a.workload, data_dir, manifest, r, work)
+                deadline - (time.time() - t_start))
+        setups.append(r)
+        attempted, failed, errors, bad = check(a.workload, data_dir, manifest, r, work)
         spans = []
         if a.trace:
             with open(r["spans"]) as fh:
@@ -283,20 +368,21 @@ def main():
         shutil.rmtree(work, ignore_errors=True)
 
     passes = r["passes"]
-    warm = [p for p in passes[1:] if not p["traced"]]
+    warm = [p for p in passes if p["role"] == "warm" and not p["traced"]]
     if a.workload == "compaction":
         samples = [b for p in warm for op in p["ops"] for b in op["batches_s"]]
     else:
         samples = [op["wall_s"] for p in warm for op in p["ops"]]
     e2e = {
-        "setup_s": r["setup_s"],
+        "setup_s": statistics.median(x["setup_s"] for x in setups),
         "cold_pass_s": passes[0]["wall_s"],
         "warm_pass_s": statistics.median(p["wall_s"] for p in warm),
         "op_p50_s": pct(samples, 50),
         "live_heap_mb": statistics.median(r["heap_mb"][p["pass"]] for p in warm),
     }
     print(f"workload {a.workload}: seed {a.seed}, local[{CPUS}], one closed-loop client, "
-          f"{len(passes)} passes ({len(warm)} warm untraced), inputs {manifest['info']}")
+          f"{len(passes)} passes (cold, warm-up, {len(warm)} warm untraced), {len(setups)} set-up samples, "
+          f"inputs {manifest['info']}")
     for n, u in END_TO_END:
         print(f"  {n:<14} {e2e[n]:12.4f} {u}")
     # The highest percentile with at least ten samples beyond it, if any.
@@ -319,11 +405,11 @@ def main():
 
     if a.trace:
         traced = [p for p in passes if p["traced"]]
-        warm_t = [p for p in traced if p["pass"] > 0]
+        warm_t = [p for p in traced if p["role"] == "warm"]
         for (pnum, k), v in self_times(spans, {p["pass"] for p in traced}).items():
             passes[pnum]["layer"][k] = v
         keys = sorted({k for p in traced for k in p["layer"]})
-        layer = {"sessions.build_s": r["sessions_build_s"],
+        layer = {"sessions.build_s": statistics.median(x["sessions_build_s"] for x in setups),
                  "trace.overhead_s": statistics.median(p["wall_s"] for p in warm_t) - e2e["warm_pass_s"]}
         for k in keys:
             layer[k] = statistics.median(p["layer"].get(k, 0.0) for p in warm_t)
@@ -332,6 +418,10 @@ def main():
         print(f"  per-layer, {len(warm_t)} traced warm passes (median) and the cold pass:")
         for k in sorted(layer):
             print(f"  {k:<34} {layer[k]:16.4f} {units.get(k, 's' if k.endswith('_s') else '')}")
+        if a.workload == "survey":
+            survey(op_layers(passes), r, bad)
+        else:
+            print_ops(op_layers(passes))
         metrics = {n: {"value": layer.get(n, 0.0), "unit": u} for n, u in per_layer_names()}
     else:
         metrics = {n: {"value": e2e[n], "unit": u} for n, u in END_TO_END}
